@@ -48,16 +48,19 @@ DOCS_SCHEMA = (
     "tags array<string>, dom_orders array<int>"
 )
 
-_COLS = ("url", "text", "n_lines", "n_chars", "starts", "ends", "scores", "tags", "dom_orders")
+# kernel output columns (url and any other light column is copied through)
+_COLS = ("text", "n_lines", "n_chars", "starts", "ends", "scores", "tags", "dom_orders")
 
 
 def _extract_batches(batches: Iterator[pd.DataFrame], cfg: ExtractionConfig = DEFAULT_CONFIG) -> Iterator[pd.DataFrame]:
+    """The one extraction loop (batch and stream): every input column
+    but the ``html`` payload is copied through, so light columns such
+    as ``warc_ts`` ride along with ``url``."""
     for pdf in batches:
         out: dict[str, list] = {k: [] for k in _COLS}
-        for url, payload in zip(pdf["url"], pdf["html"]):
+        for payload in pdf["html"]:
             res = extract_document(payload if payload is not None else b"", cfg)
             ls = res.lines
-            out["url"].append(url)
             out["text"].append(res.text)
             out["n_lines"].append(len(ls))
             out["n_chars"].append(len(res.text))
@@ -66,7 +69,7 @@ def _extract_batches(batches: Iterator[pd.DataFrame], cfg: ExtractionConfig = DE
             out["scores"].append([ln.score for ln in ls])
             out["tags"].append([ln.tag for ln in ls])
             out["dom_orders"].append([ln.order for ln in ls])
-        yield pd.DataFrame(out)
+        yield pdf.drop(columns="html").assign(**out)
 
 
 def extract_docs(

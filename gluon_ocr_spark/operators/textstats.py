@@ -127,6 +127,25 @@ def with_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def quality_gate(
+    docs: DataFrame,
+    min_tokens: int = 10,
+    max_tokens: int = 100_000,
+    max_dup_bigram_frac: float = 0.9,
+) -> DataFrame:
+    """The corpus quality gate over :func:`with_token_stats` +
+    :func:`with_repetition` columns: token-count bounds, non-empty
+    text, and the Gopher-rule repetition cap — boilerplate/spam drops
+    here, before any dedup shuffle sees it (pure expressions, fused
+    into the same codegen stage as the stats)."""
+    return docs.where(
+        (F.col("n_tokens") >= min_tokens)
+        & (F.col("n_tokens") <= max_tokens)
+        & (F.col("n_chars") > 0)
+        & (F.col("dup_bigram_frac") <= max_dup_bigram_frac)
+    )
+
+
 def compress_stats(text: str, level: int = 6) -> tuple[int, int, float]:
     """(raw_bytes, deflate_bytes, ratio) for one document — the
     compression-ratio quality signal (Gopher/CCNet family): highly

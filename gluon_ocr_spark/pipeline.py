@@ -18,17 +18,21 @@ during the one write action.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .operators.dedup import drop_exact_dups, drop_near_dups
 from .operators.extract import extract_docs
 from .operators.textstats import (
+    quality_gate,
     remove_dup_spans,
     with_fingerprint,
     with_quality,
     with_repetition,
     with_token_stats,
 )
+from .plans.lineage import CommitLog
 
 
 def prepare_corpus(
@@ -97,15 +101,7 @@ def prepare_corpus(
     else:
         docs = docs.observe(obs_in, F.count(F.lit(1)).alias("n"))
     docs = with_repetition(with_fingerprint(with_quality(with_token_stats(docs))))
-    qualified = docs.where(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("n_tokens") <= max_tokens)
-        & (F.col("n_chars") > 0)
-        # Gopher-rule repetition gate: boilerplate/spam drops here,
-        # before the dedup shuffle ever sees it (pure expressions —
-        # fused into the same codegen stage as the token gates)
-        & (F.col("dup_bigram_frac") <= max_dup_bigram_frac)
-    )
+    qualified = quality_gate(docs, min_tokens, max_tokens, max_dup_bigram_frac)
     deduped = drop_exact_dups(qualified, id_col="url", text_col="text")
     if near_dedup:
         # Transitive near-dup pruning: minhash bands → candidate
@@ -172,48 +168,25 @@ class IncrementalCorpus:
     (idempotent under foreachBatch-style redelivery)."""
 
     #: commit-log row schema BEFORE the committed_at timestamp is
-    #: appended at the commit point (single definition — used by the
-    #: createDataFrame call in ingest)
+    #: appended at the commit point
     LINEAGE_ROW_SCHEMA = "increment_id string, qualified bigint, admitted bigint"
 
     def __init__(self, warehouse_dir: str):
-        import os
-
         self.warehouse_dir = warehouse_dir
         self.docs_dir = os.path.join(warehouse_dir, "docs")
         self.fps_dir = os.path.join(warehouse_dir, "fps")
         self.bands_dir = os.path.join(warehouse_dir, "bands")
-        self.lineage_dir = os.path.join(warehouse_dir, "_lineage")
+        self.log = CommitLog(warehouse_dir, self.LINEAGE_ROW_SCHEMA, "increment")
+        self.lineage_dir = self.log.dir
 
     # -- read side ----------------------------------------------------
     def committed_ids(self, spark: SparkSession) -> list[str]:
-        """Distinct committed increment ids from the commit log.
-
-        ONLY a missing lineage directory maps to "no commits yet" — a
-        transient read failure on an existing log must raise, not be
-        mistaken for an empty warehouse (which would re-admit
-        snapshot duplicates and double-commit the increment)."""
-        import os
-
-        if not os.path.isdir(self.lineage_dir):
-            return []
-        lin = spark.read.parquet(self.lineage_dir)
-        return [r["increment_id"] for r in lin.select("increment_id").distinct().collect()]
-
-    def _read_committed(
-        self, spark: SparkSession, base_dir: str, ids: list[str]
-    ) -> DataFrame | None:
-        import os
-
-        paths = [os.path.join(base_dir, f"increment={i}") for i in ids]
-        paths = [p for p in paths if os.path.isdir(p)]
-        if not paths:
-            return None
-        return spark.read.parquet(*paths)
+        """Committed increment ids, from one read of the commit log."""
+        return list(self.log.committed(spark))
 
     def read_docs(self, spark: SparkSession) -> DataFrame | None:
         """Union of committed increments only."""
-        return self._read_committed(spark, self.docs_dir, self.committed_ids(spark))
+        return self.log.snapshots(spark, self.docs_dir, self.log.committed(spark))
 
     # -- write side ---------------------------------------------------
     def ingest(
@@ -227,41 +200,35 @@ class IncrementalCorpus:
         threshold: float = 0.8,
         num_partitions: int | None = None,
     ) -> dict:
-        import os
-
         from .operators.dedup import incremental_dedup, snapshot_artifacts
 
-        committed = self.committed_ids(spark)  # ONE commit-log read per ingest
+        # ONE commit-log read per ingest (one log row per increment)
+        committed = self.log.committed(
+            spark, F.max("qualified").alias("qualified"), F.max("admitted").alias("admitted")
+        )
         if increment_id in committed:
-            lin = (
-                spark.read.parquet(self.lineage_dir)
-                .where(F.col("increment_id") == increment_id)
-                .collect()[0]
-            )
+            prior = committed[increment_id]
             return {
                 "increment_id": increment_id,
-                "qualified": lin["qualified"],
-                "admitted": lin["admitted"],
+                "qualified": prior["qualified"],
+                "admitted": prior["admitted"],
                 "replayed": True,
             }
 
         docs = with_repetition(with_quality(with_token_stats(
             extract_docs(pages, num_partitions=num_partitions)
         )))
-        qualified = docs.where(
-            (F.col("n_tokens") >= min_tokens)
-            & (F.col("n_tokens") <= max_tokens)
-            & (F.col("n_chars") > 0)
-            & (F.col("dup_bigram_frac") <= max_dup_bigram_frac)
-        ).select("url", "text", "n_lines", "n_chars", "n_tokens", "dup_bigram_frac")
+        qualified = quality_gate(docs, min_tokens, max_tokens, max_dup_bigram_frac).select(
+            "url", "text", "n_lines", "n_chars", "n_tokens", "dup_bigram_frac"
+        )
         # one materialization of the gated batch: the dedup stages
         # read it repeatedly (same boundary as prepare_corpus)
         qualified = qualified.localCheckpoint(eager=True)
         n_qualified = qualified.count()
 
-        base = self._read_committed(spark, self.docs_dir, committed)
-        base_fps = self._read_committed(spark, self.fps_dir, committed)
-        base_bands = self._read_committed(spark, self.bands_dir, committed)
+        base = self.log.snapshots(spark, self.docs_dir, committed)
+        base_fps = self.log.snapshots(spark, self.fps_dir, committed)
+        base_bands = self.log.snapshots(spark, self.bands_dir, committed)
         if base is None:
             # first increment: no snapshot — within-batch dedup only
             from .operators.dedup import drop_near_dups as _dnd
@@ -283,12 +250,7 @@ class IncrementalCorpus:
             os.path.join(self.bands_dir, f"increment={increment_id}")
         )
         n_admitted = written.count()
-        lineage = spark.createDataFrame(
-            [(increment_id, n_qualified, n_admitted)],
-            self.LINEAGE_ROW_SCHEMA,
-        ).withColumn("committed_at", F.current_timestamp())
-        # THE commit point — one file, all-or-nothing append
-        lineage.coalesce(1).write.mode("append").parquet(self.lineage_dir)
+        self.log.commit(spark, [(increment_id, n_qualified, n_admitted)])
         return {
             "increment_id": increment_id,
             "qualified": n_qualified,

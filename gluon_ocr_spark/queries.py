@@ -3530,7 +3530,7 @@ def corpus_prep_roundtrip_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators.dedup import drop_exact_dups
     from .operators.extract import extract_docs
-    from .operators.textstats import with_quality, with_repetition, with_token_stats
+    from .operators.textstats import quality_gate, with_quality, with_repetition, with_token_stats
     from .sources.pages import wrap_documents, wrap_documents_pdf
 
     docs_tbl = _docs(spark, sf_dir)
@@ -3538,12 +3538,7 @@ def corpus_prep_roundtrip_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     odd = wrap_documents_pdf(docs_tbl.where(F.col("doc_id") % 2 == 1))
     pages = even.unionByName(odd)
     docs = with_repetition(with_quality(with_token_stats(extract_docs(pages))))
-    qualified = docs.where(
-        (F.col("n_tokens") >= 10)
-        & (F.col("n_tokens") <= 100_000)
-        & (F.col("n_chars") > 0)
-        & (F.col("dup_bigram_frac") <= 0.9)
-    )
+    qualified = quality_gate(docs)
     deduped = drop_exact_dups(qualified, id_col="url", text_col="text")
     return deduped.select(
         F.split_part(F.col("url"), F.lit("doc://"), F.lit(-1)).cast("bigint").alias("doc_id"),
@@ -3660,7 +3655,7 @@ def corpus_prep_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators.dedup import drop_exact_dups, drop_near_dups
     from .operators.extract import extract_docs
-    from .operators.textstats import with_quality, with_repetition, with_token_stats
+    from .operators.textstats import quality_gate, with_quality, with_repetition, with_token_stats
     from .sources.pages import wrap_documents, wrap_documents_pdf
 
     docs_tbl = _docs(spark, sf_dir)
@@ -3668,12 +3663,7 @@ def corpus_prep_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     odd = wrap_documents_pdf(docs_tbl.where(F.col("doc_id") % 2 == 1))
     pages = even.unionByName(odd)
     docs = with_repetition(with_quality(with_token_stats(extract_docs(pages))))
-    qualified = docs.where(
-        (F.col("n_tokens") >= 10)
-        & (F.col("n_tokens") <= 100_000)
-        & (F.col("n_chars") > 0)
-        & (F.col("dup_bigram_frac") <= 0.9)
-    )
+    qualified = quality_gate(docs)
     deduped = drop_exact_dups(qualified, id_col="url", text_col="text").select(
         F.split_part(F.col("url"), F.lit("doc://"), F.lit(-1)).cast("bigint").alias("doc_id"),
         "text",

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.extract import _extract_batches, DOCS_SCHEMA
+from ..operators.extract import DOCS_SCHEMA, _extract_batches, extract_docs
 from ..sources.pages import PAGES_SCHEMA
 
 
@@ -24,11 +24,6 @@ def read_pages_stream(spark: SparkSession, pages_dir: str, max_files_per_trigger
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.parquet(pages_dir)
-
-
-def extract_docs_stream(pages: DataFrame) -> DataFrame:
-    """Streaming extraction: identical kernel, identical output schema."""
-    return pages.select("url", "html").mapInPandas(_extract_batches, schema=DOCS_SCHEMA)
 
 
 def run_extract_stream(
@@ -41,8 +36,9 @@ def run_extract_stream(
     """File-source → extraction → parquet sink with checkpoint.
 
     ``availableNow`` drains the backlog and stops — the test/bench
-    mode; continuous triggers are the production mode."""
-    docs = extract_docs_stream(read_pages_stream(spark, pages_dir))
+    mode; continuous triggers are the production mode. Extraction is
+    the batch operator unchanged (it is stateless per page)."""
+    docs = extract_docs(read_pages_stream(spark, pages_dir))
     writer = (
         docs.writeStream.format("parquet")
         .option("path", out_dir)
@@ -189,27 +185,11 @@ def extract_docs_stream_ts(pages: DataFrame) -> DataFrame:
     """Streaming extraction that CARRIES the event time: stateful
     downstreams (watermark dedup, windowed aggs) need ``warc_ts`` to
     survive the Arrow UDF edge; the batch extractor drops it because
-    batch dedup keys on content alone. Same kernel, same
-    partitioning; only the light columns ride along."""
-    import pandas as pd
-
-    schema = "url string, warc_ts timestamp, text string, n_lines int, n_chars int"
-
-    def gen(batches):
-        from ..kernels.extract import extract_document
-
-        for pdf in batches:
-            out = {k: [] for k in ("url", "warc_ts", "text", "n_lines", "n_chars")}
-            for url, ts, payload in zip(pdf["url"], pdf["warc_ts"], pdf["html"]):
-                res = extract_document(bytes(payload) if payload is not None else b"")
-                out["url"].append(url)
-                out["warc_ts"].append(ts)
-                out["text"].append(res.text)
-                out["n_lines"].append(len(res.lines))
-                out["n_chars"].append(len(res.text))
-            yield pd.DataFrame(out)
-
-    return pages.select("url", "warc_ts", "html").mapInPandas(gen, schema=schema)
+    batch dedup keys on content alone. Same kernel loop (it copies
+    the light columns through), same partitioning."""
+    return pages.select("url", "warc_ts", "html").mapInPandas(
+        _extract_batches, schema=f"{DOCS_SCHEMA}, warc_ts timestamp"
+    ).select("url", "warc_ts", "text", "n_lines", "n_chars")
 
 
 def corpus_prep_stream(
@@ -234,16 +214,11 @@ def corpus_prep_stream(
     stays batch-side (prepare_corpus): connected components need the
     full pair graph; the streaming approximation is
     :func:`near_dedup_stream`."""
-    from ..operators.textstats import with_quality, with_repetition, with_token_stats
+    from ..operators.textstats import quality_gate, with_quality, with_repetition, with_token_stats
 
     docs = extract_docs_stream_ts(pages)
     docs = with_repetition(with_quality(with_token_stats(docs)))
-    qualified = docs.where(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("n_tokens") <= max_tokens)
-        & (F.col("n_chars") > 0)
-        & (F.col("dup_bigram_frac") <= max_dup_bigram_frac)
-    )
+    qualified = quality_gate(docs, min_tokens, max_tokens, max_dup_bigram_frac)
     keyed = qualified.withColumn(
         "content_fp", F.md5(F.lower(F.col("text")))
     ).withWatermark("warc_ts", watermark)

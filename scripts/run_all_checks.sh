@@ -7,6 +7,9 @@ cd "$(dirname "$0")/.."
 echo "== pytest =="
 python -m pytest tests/ -q
 
+echo "== benchmark tests =="
+python -m pytest perfbench/tests -q
+
 echo "== parity sf0.001 =="
 python scripts/check_parity.py /root/testdata/sf0.001 2>/dev/null | grep -E '^(ok|FAIL|==)'
 

@@ -110,3 +110,15 @@ def test_crash_mid_ingest_then_retry(spark, tmp_path):
     # exactly one lineage row for inc2
     lin = spark.read.parquet(wh.lineage_dir)
     assert lin.where("increment_id = 'inc2'").count() == 1
+
+
+def test_crashed_first_commit_does_not_wedge(spark, tmp_path):
+    """A crash during the FIRST lineage append leaves ``_lineage/``
+    holding only the committer's ``_temporary/`` — no data file. That
+    must read as "no commits yet", not fail every later ingest."""
+    wh = IncrementalCorpus(str(tmp_path / "wh4"))
+    os.makedirs(os.path.join(wh.lineage_dir, "_temporary", "0"))
+
+    r = wh.ingest(spark, _pages(spark, [("page://a", DOC_A), ("page://b", DOC_B)]), "inc1")
+    assert (r["admitted"], r["replayed"]) == (2, False)
+    assert wh.committed_ids(spark) == ["inc1"]

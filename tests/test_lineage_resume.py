@@ -3,6 +3,10 @@
 import os
 import shutil
 
+import pytest
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
+
 from gluon_ocr_spark.plans.lineage import ExtractionJob
 from gluon_ocr_spark.sources.pages import pages_dataframe
 
@@ -83,3 +87,22 @@ def test_committed_run_replay_is_noop(spark, tmp_path):
     docs = job.read_docs(spark)
     assert docs.count() == 8  # data survived the replay intact
     assert docs.where("text IS NULL").count() == 0
+
+
+def test_unreadable_log_raises_instead_of_reading_empty(spark, tmp_path):
+    """Only a MISSING commit log means "no commits yet". A log that
+    exists but cannot be read must raise: reading it as empty would
+    re-extract and re-commit every url, breaking exactly-once."""
+    out = str(tmp_path / "out5")
+    job = ExtractionJob(out, num_partitions=2)
+    pages = pages_dataframe(spark, 6, SEED, partitions=2)
+    job.run(spark, pages, run_id="r1")
+    # corrupt the committed log file in place (a torn or bit-rotted
+    # write), so every read of the log fails whatever file it touches
+    (committed,) = [f for f in os.listdir(job.lineage_dir) if f.endswith(".parquet")]
+    with open(os.path.join(job.lineage_dir, committed), "wb") as f:
+        f.write(b"not a parquet file")
+
+    with pytest.raises((Py4JJavaError, PySparkException)):  # a JVM-side read failure
+        job.run(spark, pages, run_id="r2")
+    assert os.listdir(job.docs_dir) == ["run_id=r1"]
